@@ -85,7 +85,7 @@ def cmd_transform(spark: SparkSession, args) -> int:
     """The reference's KPI job (transform.py:204-227) with the
     executor-side sink replacing its driver-side collect loop."""
     from .operators.kpis import category_kpis, order_kpis
-    from .sinks.kv import write_kv_batch
+    from .sinks.kv import write_kv_upsert
 
     tables = _load_ecom(spark, args)
     for df in tables.values():
@@ -93,8 +93,13 @@ def cmd_transform(spark: SparkSession, args) -> int:
     cat = category_kpis(tables["order_items"], tables["orders"], tables["products"])
     order = order_kpis(tables["orders"], tables["order_items"])
     store = args.store or os.environ.get("KPI_STORE_PATH", "kpis.db")
-    write_kv_batch(cat, store, ["category", "order_date"], table="category_kpis")
-    write_kv_batch(order, store, ["order_date"], table="order_kpis")
+    write_kv_upsert(
+        {
+            "category_kpis": (cat, ["category", "order_date"]),
+            "order_kpis": (order, ["order_date"]),
+        },
+        store,
+    )
     logger.info("KPI tables written to %s", store)
     return 0
 

@@ -846,10 +846,15 @@ def multi_arm_hamming_pairs(
     the per-arm cap.
 
     Output: (modality, media_id_a, media_id_b, min_hamming), a < b,
-    min_hamming <= max_dist.  Callers pin the signature relations.
+    min_hamming <= max_dist.  The distance column is ``min_hamming``
+    for every arm, media-grain ones included, where the per-arm
+    ``_banded_hamming_pairs`` names it ``hamming_dist``.  Callers pin
+    the signature relations.  Raises ``ValueError`` for empty ``arms``.
     """
     from .dedup import _cap_posting_buckets, hamming_band_keys
 
+    if not arms:
+        raise ValueError("arms must be non-empty")
     tags = {mod: i for i, mod in enumerate(arms)}
     posting = None
     for mod, sig in arms.items():

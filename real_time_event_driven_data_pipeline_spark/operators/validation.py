@@ -15,8 +15,10 @@ re-scanning CSVs without caching.  Ours restructures the plans
 - ``duplicate_keys``: groupBy(key).count().filter(count>1)
   (validate.py:158-172) — two-phase hash agg, no extra scan of parents.
 - ``validate_tables``: the full battery with the reference's verdict
-  semantics (conjunction of all checks; offender keys reported), one
-  cached scan per table.
+  semantics (conjunction of all checks; offender keys reported).  Each
+  table's empty guard, null counts, duplicate-row count and (for the
+  streaming gate) cross-batch key hits are ONE aggregate query; the
+  offender keys of a failing check are a second query, run only then.
 
 Exit-code signaling (validate.py:177-189) lives in the CLI wrapper
 (plans/cli.py), keeping operators side-effect free.
@@ -26,6 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -89,6 +92,7 @@ class CheckResult:
 @dataclass
 class ValidationReport:
     checks: list[CheckResult] = field(default_factory=list)
+    rows: dict[str, int] = field(default_factory=dict)
 
     @property
     def passed(self) -> bool:
@@ -98,40 +102,86 @@ class ValidationReport:
         self.checks.append(CheckResult(*args, **kwargs))
 
 
+def _table_stats(
+    df: DataFrame, nn: list[str], pk: list[str] | None, seen: DataFrame | None
+) -> dict:
+    """Every per-table count the battery needs, in ONE query: rows,
+    per-column null counts, ``count(*) - count_distinct(pk)`` (the rows
+    beyond the first of each key; a struct so a null key counts as one
+    value, as ``duplicate_keys`` groups it) and, when ``seen`` holds
+    prior keys, the batch rows whose key is among them.  The seen-key
+    probe is a left_semi sub-aggregate cross-joined onto the one-row
+    main aggregate, so a repeated history key cannot fan rows out."""
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    aggs += [
+        F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).cast("long").alias(f"{c}_nulls")
+        for c in nn
+    ]
+    if pk:
+        aggs.append(
+            (F.count(F.lit(1)) - F.count_distinct(F.struct(*pk))).alias("__dup_rows")
+        )
+    stats = df.agg(*aggs)
+    if seen is not None:
+        stats = stats.crossJoin(
+            df.join(seen, pk, "left_semi").agg(F.count(F.lit(1)).alias("__seen_rows"))
+        )
+    return stats.collect()[0].asDict()
+
+
 def validate_tables(
     tables: dict[str, DataFrame],
     schemas: dict[str, T.StructType],
     primary_keys: dict[str, list[str]],
     foreign_keys: list[tuple[str, str, str, str]],
     max_offenders: int = 20,
+    seen_keys: dict[str, DataFrame] | None = None,
 ) -> ValidationReport:
     """Full battery: empty-guard, fused null checks, FK integrity, key
     uniqueness.  Verdict = conjunction (reference validate.py:100-175);
     unlike the reference we do NOT short-circuit, so one run reports
     every defect class.
+
+    Each table's counts come from one aggregate query
+    (``_table_stats``); offender keys are collected only for a failing
+    uniqueness check.  ``seen_keys`` maps a table to the primary keys
+    accepted by earlier arrivals: its ``unique_key_cross_batch`` check
+    is reported only when every other check passed, which is how the
+    incremental gate (streaming/pipeline.py) has always reported it.
+    Tables the caller has not pinned are cached for the FK checks and
+    unpersisted at the end; a caller's pin is left alone.
     """
     report = ValidationReport()
-    cached = {}
+    seen_keys = seen_keys or {}
+    pinned = [df.cache() for df in tables.values() if df.storageLevel == StorageLevel.NONE]
+    seen_rows = {}
     for name, df in tables.items():
-        cached[name] = df.cache()
-        if not df.limit(1).take(1):
+        nn = non_nullable_columns(schemas[name]) if name in schemas else []
+        nn = [c for c in nn if c in df.columns]
+        pk = primary_keys.get(name)
+        pk = pk if pk and all(c in df.columns for c in pk) else None
+        stats = _table_stats(df, nn, pk, seen_keys.get(name) if pk else None)
+        report.rows[name] = stats.pop("__rows")
+        if not report.rows[name]:
             report.add(name, "non_empty", False, "table is empty")
             continue
         report.add(name, "non_empty", True)
-        nn = non_nullable_columns(schemas[name]) if name in schemas else []
-        nn = [c for c in nn if c in df.columns]
+        if "__seen_rows" in stats:
+            seen_rows[name] = stats.pop("__seen_rows")
         if nn:
-            row = null_counts(df, nn).collect()[0].asDict()
-            bad = {c: n for c, n in row.items() if n}
+            bad = {f"{c}_nulls": stats[f"{c}_nulls"] for c in nn if stats[f"{c}_nulls"]}
             report.add(
                 name,
                 "null_check",
                 not bad,
                 f"null counts in non-nullable columns: {bad}" if bad else "",
             )
-        pk = primary_keys.get(name)
-        if pk and all(c in df.columns for c in pk):
-            dups = duplicate_keys(df, pk).limit(max_offenders).collect()
+        if pk:
+            dups = (
+                duplicate_keys(df, pk).limit(max_offenders).collect()
+                if stats["__dup_rows"]
+                else []
+            )
             report.add(
                 name,
                 "unique_key",
@@ -140,10 +190,10 @@ def validate_tables(
                 offenders=[tuple(r[c] for c in pk) for r in dups],
             )
     for child, child_key, parent, parent_key in foreign_keys:
-        if child not in cached or parent not in cached:
+        if child not in tables or parent not in tables:
             continue
         offenders = (
-            orphan_keys(cached[child], cached[parent], child_key, parent_key)
+            orphan_keys(tables[child], tables[parent], child_key, parent_key)
             .limit(max_offenders)
             .collect()
         )
@@ -154,6 +204,14 @@ def validate_tables(
             f"orphan {child_key} values" if offenders else "",
             offenders=[r[child_key] for r in offenders],
         )
-    for df in cached.values():
+    if report.passed:
+        for name, hits in seen_rows.items():
+            report.add(
+                name,
+                "unique_key_cross_batch",
+                hits == 0,
+                "batch contains keys already accepted in a prior arrival" if hits else "",
+            )
+    for df in pinned:
         df.unpersist()
     return report

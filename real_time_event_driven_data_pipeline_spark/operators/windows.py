@@ -88,6 +88,10 @@ def _grouped_hierarchical_prefix(
     """
     from .dedup import _scoped_cache
 
+    if materialize not in ("cache", "checkpoint"):
+        raise ValueError(
+            f"materialize must be 'cache' or 'checkpoint', got {materialize!r}"
+        )
     parts = _num_partitions(df, num_partitions)
     # pinned (r10): the ranged relation feeds BOTH the totals aggregate
     # and the local-prefix window, and column pruning de-unifies the two

@@ -13,6 +13,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding this package: workers start ``WORKER_DAEMON``
+# with ``python -m``, so it must be importable whatever the JVM's cwd
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKER_DAEMON = f"{__package__}.worker_daemon"
+
 # Knobs that are safe to (re)apply on an externally supplied session at
 # runtime.  Timezone pinning matters for oracle comparison: DuckDB
 # timestamps are naive-UTC, so date truncation must agree.
@@ -114,6 +119,11 @@ def get_spark(app_name: str = "rtedp-spark", cpus: int | None = None) -> SparkSe
 
     On a real cluster the master/memory settings come from spark-submit;
     everything set here is either local-only or cluster-neutral.
+
+    Python workers fork from ``worker_daemon``, which skips the
+    ``pyspark.zip`` re-read PySpark's worker does before every task
+    (see that module); the package root goes on the workers'
+    ``PYTHONPATH`` so the daemon can be imported.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -125,6 +135,8 @@ def get_spark(app_name: str = "rtedp-spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", WORKER_DAEMON)
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

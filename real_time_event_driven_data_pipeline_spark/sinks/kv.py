@@ -6,10 +6,14 @@ calls (reference: docker-images/transformation/transform.py:149-202).
 Fine at 250 rows; O(result) driver memory and zero parallelism at
 100 TB.  Ours keeps writes on the executors:
 
-- batch:     ``write_kv_batch(df, ...)`` -> ``df.foreachPartition``
-- streaming: ``write_kv_upsert(batch_df, ...)`` from ``foreachBatch``,
-  idempotent per key (exactly-once under retries given a deterministic
+- ``write_kv_upsert({table: (df, key_cols), ...}, ...)`` upserts every
+  table of one activation in ONE Spark job: the tables' row RDDs are
+  unioned on the JVM side, and each task of the job's single stage
+  writes one partition of one table from one Python worker, so an
+  ``EventDrivenPipeline`` activation serving two KPI tables pays one
+  job and one Python write stage, not one per table.  Idempotent per key (exactly-once under retries given a deterministic
   key, the standard Structured Streaming sink contract).
+- ``write_kv_batch(df, ...)``: the one-table call of the same job.
 
 The store is pluggable; ``SQLiteKVStore`` is the local stand-in for a
 DynamoDB-style table (INSERT OR REPLACE == put_item upsert).  The
@@ -20,6 +24,7 @@ ISO strings, floats -> 2-dp Decimal-safe strings, ints -> ints.
 
 from __future__ import annotations
 
+import bisect
 import datetime as _dt
 import hashlib
 import json
@@ -166,6 +171,54 @@ def _make_key(row_dict: dict, key_cols: list[str]) -> str:
     return "|".join(str(ser[c]) for c in key_cols)
 
 
+def write_kv_upsert(
+    tables: dict[str, tuple[DataFrame, list[str]]],
+    store_path: str,
+    store_factory: Callable[[str], KVStore] | None = None,
+) -> None:
+    """Idempotent keyed upsert of several tables in ONE Spark job.
+
+    ``tables`` maps a table name to (frame, key columns).  The frames'
+    row RDDs are unioned on the JVM side, so the job has one stage and
+    each of its tasks makes one Python pass, writing one partition of
+    one table; a task finds its table from its partition index (the
+    union lays each table's partitions out contiguously, in order).
+    Keys and values are ``_make_key`` / ``json.dumps(serialize_row)``.
+
+    ``store_factory(table)`` selects the adapter (must be a pickle-safe
+    closure); default is the SQLite stand-in at ``store_path``.
+    """
+    if not tables:
+        return
+    if store_factory is None:
+        def store_factory(table: str) -> KVStore:
+            return SQLiteKVStore(store_path, table)
+
+    names, key_cols, rdds, starts = [], [], [], []
+    n_parts = 0
+    for name, (df, keys) in tables.items():
+        names.append(name)
+        key_cols.append(keys)
+        rdds.append(df.rdd)
+        starts.append(n_parts)
+        n_parts += rdds[-1].getNumPartitions()
+
+    def _write_partition(index: int, rows):
+        t = bisect.bisect_right(starts, index) - 1
+        store, keys, items = store_factory(names[t]), key_cols[t], []
+        for row in rows:
+            d = row.asDict()
+            items.append((_make_key(d, keys), json.dumps(serialize_row(d))))
+            if len(items) >= 500:
+                store.put_batch(items)
+                items = []
+        if items:
+            store.put_batch(items)
+        return iter(())
+
+    rdds[0].context.union(rdds).mapPartitionsWithIndex(_write_partition).count()
+
+
 def write_kv_batch(
     df: DataFrame,
     store_path: str,
@@ -173,36 +226,11 @@ def write_kv_batch(
     table: str = "kv",
     store_factory: Callable[[], KVStore] | None = None,
 ) -> None:
-    """Executor-side partitioned upsert (the reference's driver loop,
-    distributed).  Each partition serializes and writes its own rows.
-
-    ``store_factory`` selects the adapter (must be a pickle-safe
-    closure); default is the SQLite stand-in at ``store_path``.
-    """
-    if store_factory is None:
-        def store_factory() -> KVStore:
-            return SQLiteKVStore(store_path, table)
-
-    def _write_partition(rows) -> None:
-        batch, items = store_factory(), []
-        for row in rows:
-            d = row.asDict()
-            items.append((_make_key(d, key_cols), json.dumps(serialize_row(d))))
-            if len(items) >= 500:
-                batch.put_batch(items)
-                items = []
-        if items:
-            batch.put_batch(items)
-
-    df.foreachPartition(_write_partition)
-
-
-def write_kv_upsert(
-    batch_df: DataFrame,
-    store_path: str,
-    key_cols: list[str],
-    table: str = "kv",
-    store_factory: Callable[[], KVStore] | None = None,
-) -> None:
-    """foreachBatch body: idempotent keyed upsert of a micro-batch."""
-    write_kv_batch(batch_df, store_path, key_cols, table, store_factory)
+    """One table through ``write_kv_upsert`` (the reference's driver
+    loop, distributed: each partition serializes and writes its own
+    rows).  ``store_factory`` takes no argument here."""
+    write_kv_upsert(
+        {table: (df, key_cols)},
+        store_path,
+        None if store_factory is None else lambda _table: store_factory(),
+    )

@@ -40,6 +40,7 @@ contract.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _fs(spark: SparkSession, path: str):
@@ -64,7 +65,10 @@ def commit_epoch(spark: SparkSession, marker_dir: str, epoch_id: int) -> None:
 
 
 def read_epoch_dir(
-    spark: SparkSession, path: str, exclude_epoch: int | None = None
+    spark: SparkSession,
+    path: str,
+    exclude_epoch: int | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame | None:
     """Read a per-epoch published directory; ``None`` if absent/empty.
 
@@ -76,7 +80,10 @@ def read_epoch_dir(
     (b) be deleted by this attempt's publish while a lazy plan still
     references them (FILE_NOT_EXIST at action time).  Excluding the
     current epoch makes the read see exactly the pre-epoch history,
-    which is the correct gate input by definition."""
+    which is the correct gate input by definition.
+
+    ``schema`` (the schema the files were written with) skips parquet
+    schema inference, which otherwise costs a Spark job per read."""
     fs, jvm = _fs(spark, path)
     root = jvm.org.apache.hadoop.fs.Path(path)
     if not fs.exists(root):
@@ -92,7 +99,8 @@ def read_epoch_dir(
         files.append(st.getPath().toString())
     if not files:
         return None
-    return spark.read.parquet(*files)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*files)
 
 
 def publish_epoch(df: DataFrame, target_dir: str, epoch_id: int) -> None:

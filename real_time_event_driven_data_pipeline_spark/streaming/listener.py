@@ -4,8 +4,8 @@ The reference's jobs emit structured log lines to stdout for CloudWatch
 (reference: docker-images/validation/validate.py:8-13).  Batch jobs here
 do the same via ``logging`` (cli.py); the streaming path additionally
 gets a ``StreamingQueryListener`` that logs one structured line per
-micro-batch progress event — rows/sec, batch duration, watermark — the
-numbers an operator alarms on at 100 TB/day.
+micro-batch progress event — rows/sec, batch duration and its phases,
+watermark — the numbers an operator alarms on at 100 TB/day.
 """
 
 from __future__ import annotations
@@ -31,10 +31,15 @@ class MetricsLogListener(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
+        phases = dict(p.durationMs or {})
         rec = {
             "batch_id": p.batchId,
             "num_input_rows": p.numInputRows,
-            "duration_ms": (p.durationMs or {}).get("triggerExecution"),
+            "duration_ms": phases.get("triggerExecution"),
+            # every durationMs phase (latestOffset, getBatch,
+            # queryPlanning, addBatch, walCommit, commitOffsets, ...):
+            # which part of the trigger owns its time
+            "duration_phases_ms": phases,
             "input_rows_per_sec": p.inputRowsPerSecond,
             "watermark": p.eventTime.get("watermark") if p.eventTime else None,
         }

@@ -68,7 +68,28 @@ SLOW_TESTS = {
 }
 
 
-def pytest_collection_modifyitems(config, items):
+TESTS_DIR = Path(__file__).resolve().parent
+
+
+def _collects_whole_suite(config) -> bool:
+    """True when some command-line path is this directory or above it,
+    so every test module here was collected."""
+    targets = {TESTS_DIR, *TESTS_DIR.parents}
+    args = [a.split("::")[0] for a in config.args]
+    return any(Path(config.invocation_params.dir, a).resolve() in targets for a in args)
+
+
+def pytest_collection_modifyitems(session, config, items):
+    names = set()
     for item in items:
-        if item.name.split("[")[0] in SLOW_TESTS:
+        name = item.name.split("[")[0]
+        names.add(name)
+        if name in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # a renamed or deleted test must not drop out of the slow set
+    # silently; a module that failed to import cannot be checked
+    stale = SLOW_TESTS - names
+    if stale and not session.testsfailed and _collects_whole_suite(config):
+        raise pytest.UsageError(
+            f"SLOW_TESTS entries match no collected test: {sorted(stale)}"
+        )

@@ -1050,6 +1050,13 @@ def test_multi_arm_hamming_pairs_equals_per_arm(spark):
     sig.unpersist()
 
 
+def test_multi_arm_hamming_pairs_rejects_empty_arms():
+    from real_time_event_driven_data_pipeline_spark.operators import multimodal
+
+    with pytest.raises(ValueError, match="arms must be non-empty"):
+        multimodal.multi_arm_hamming_pairs({})
+
+
 def test_video_frame_dhash_clamps_to_payload_length(spark):
     """Duration alone must not drive frame count: suffix i >= n_bytes is
     empty, so every frame past byte n_bytes-1 would hash the identical

@@ -48,3 +48,52 @@ def test_all_knobs_land_in_builder():
     opts = builder._options
     for k, v in confs.items():
         assert opts[k] == v
+
+
+def test_fresh_session_runs_python_jobs_under_worker_daemon(tmp_path):
+    """A new ``get_spark`` session, started outside the repository (so
+    only the session's own worker PYTHONPATH makes the daemon
+    importable), runs a Python RDD job and a pandas UDF, and its
+    workers carry the no-op zip cache invalidation."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    script = f"""
+import json, sys
+sys.path.insert(0, {str(repo)!r})
+import pandas as pd
+from pyspark.sql.functions import pandas_udf
+from real_time_event_driven_data_pipeline_spark.session import WORKER_DAEMON, get_spark
+
+spark = get_spark("worker-daemon-check", cpus=2)
+sc = spark.sparkContext
+
+def probe(_):
+    import zipimport
+    yield zipimport.zipimporter.invalidate_caches.__qualname__
+
+@pandas_udf("long")
+def plus_one(s: pd.Series) -> pd.Series:
+    return s + 1
+
+print(json.dumps({{
+    "daemon": sc.getConf().get("spark.python.daemon.module") == WORKER_DAEMON,
+    "rdd": sc.parallelize(range(10), 2).map(lambda x: x * x).sum(),
+    "invalidate": sorted(set(sc.parallelize(range(2), 2).mapPartitions(probe).collect())),
+    "udf": [r[0] for r in spark.range(3).select(plus_one("id")).orderBy(1).collect()],
+}}))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out == {"daemon": True, "rdd": 285, "invalidate": ["<lambda>"], "udf": [1, 2, 3]}

@@ -215,3 +215,44 @@ def test_kv_store_protocol_pluggable(spark, tmp_path):
         stores[factory.__name__] = store.all_items()
 
     assert stores["sqlite_factory"] == stores["jsondir_factory"]
+
+
+def test_multi_table_upsert_byte_equal_to_per_table_writes(spark, tmp_path):
+    """Both KPI tables of an activation in one ``write_kv_upsert`` job
+    store exactly the keys and value strings that per-table
+    ``write_kv_batch`` writes, and that the driver-side serialization
+    contract produces."""
+    import json
+    import sqlite3
+
+    from real_time_event_driven_data_pipeline_spark.operators.kpis import order_kpis
+    from real_time_event_driven_data_pipeline_spark.sinks.kv import _make_key, write_kv_upsert
+
+    products, orders, order_items = make_ecom(n_products=80, n_orders=70, seed=5)
+    items = to_spark(spark, order_items, ECOM_SCHEMAS["order_items"])
+    odf = to_spark(spark, orders, ECOM_SCHEMAS["orders"])
+    tables = {
+        "category_kpis": (
+            category_kpis(items, odf, to_spark(spark, products, ECOM_SCHEMAS["products"])),
+            ["category", "order_date"],
+        ),
+        # several partitions in the second table: every task must find
+        # its own table from its partition index in the union
+        "order_kpis": (order_kpis(odf, items).repartition(3), ["order_date"]),
+    }
+    multi, single = str(tmp_path / "multi.db"), str(tmp_path / "single.db")
+    write_kv_upsert(tables, multi)
+    for name, (df, keys) in tables.items():
+        write_kv_batch(df, single, keys, table=name)
+
+    def raw(path, table):
+        with sqlite3.connect(path) as con:
+            return dict(con.execute(f"SELECT k, v FROM {table}").fetchall())
+
+    for name, (df, keys) in tables.items():
+        want = {
+            _make_key(r.asDict(), keys): json.dumps(serialize_row(r.asDict()))
+            for r in df.collect()
+        }
+        assert len(want) > 1
+        assert raw(multi, name) == raw(single, name) == want

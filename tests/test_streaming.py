@@ -283,10 +283,12 @@ def test_metrics_listener_captures_batches(spark, pipeline_env):
             break
         _time.sleep(0.25)
     assert listener.records, "no progress events captured"
-    # numInputRows counts source reads; the cached gate reads the 80
-    # arrival rows once (plus the cache-materializing first action)
-    assert sum(r["num_input_rows"] for r in listener.records) >= 80
+    # numInputRows counts source reads: the pinned gate reads the 80
+    # arrival rows exactly once
+    assert sum(r["num_input_rows"] for r in listener.records) == 80
     assert all("batch_id" in r for r in listener.records)
+    phases = next(r for r in listener.records if r["num_input_rows"])["duration_phases_ms"]
+    assert {"addBatch", "walCommit", "triggerExecution"} <= set(phases)
 
 
 def test_streaming_scorer_matches_batch_under_frozen_weights(spark, tmp_path):

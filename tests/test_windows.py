@@ -219,3 +219,16 @@ def test_grouped_helpers_rank_the_null_group(spark):
         ).collect()
     }
     assert got_sum == want_sum
+
+
+@pytest.mark.parametrize(
+    "helper, args",
+    [
+        (with_global_row_number, (["val", "key"], "rn")),
+        (with_grouped_row_number, (["val"], [("key", True)], "rn")),
+    ],
+)
+def test_unknown_materialize_raises(spark, helper, args):
+    # a typo must not silently fall back to the cache pin
+    with pytest.raises(ValueError, match="materialize"):
+        helper(_rows(5, spark), *args, materialize="checkpont")
