@@ -962,9 +962,10 @@ def incremental_near_dup_pairs_indexed(
 
     Identical output; the difference is operational: history costs one
     narrow index scan (no text read, no re-shingling — the O(corpus)
-    term of the text-side variant), and the exact-verification step
-    reconstructs shingle sets only for candidate documents.  This is
-    the 100 TB shape of the arrival-time dedup gate.
+    term of the text-side variant), and the exact verification counts
+    each candidate pair's shared shingles from the same probed postings
+    instead of rebuilding shingle sets.  This is the 100 TB shape of
+    the arrival-time dedup gate.
 
     Only shingles PROBED by the new batch can produce pairs, so the
     history side is restricted map-side to the batch's broadcast
@@ -977,9 +978,20 @@ def incremental_near_dup_pairs_indexed(
     row of a probed shingle, so probed shingles' df counts (stop-
     shingle cap + prefix order) are their true global values, dropping
     unprobed shingles only shifts prefix positions EARLIER (candidate
-    superset; the positional alpha filter also only loosens), and the
-    final exact-Jaccard verification is unchanged — pytest pins the
-    gate equal to the batch operator either way.
+    superset; the positional alpha filter also only loosens), and every
+    shingle a pair shares is a shingle of its new member, hence probed,
+    so the overlap count is exact — pytest pins the gate equal to the
+    text-side operator either way.
+
+    Plan shape: the df count is one ``count over (partition by
+    shingle)`` window on the probed postings, serving both the stop-
+    shingle cap (which drops whole shingles, so it never changes a
+    surviving shingle's count) and the rarity order.  The probed
+    postings and the prefix are each read by several consumers, so
+    both are pinned: left lazy, Catalyst inlines every reference and
+    the plan grows to ~2^4 copies of the posting union whose exchanges
+    AQE cannot reuse (hundreds of one-task jobs for a 40-document
+    batch).
     """
     sh_new = _scoped_cache(
         with_shingles(new, id_col, text_col, k, hashed=True), "inc_sh_new"
@@ -993,25 +1005,31 @@ def incremental_near_dup_pairs_indexed(
     probed_hist = existing_posts.select(id_col, "n_sh", "shingle").join(
         F.broadcast(probed_keys), "shingle", "left_semi"
     )
-    posts_all = _drop_stop_shingles(
-        probed_hist.unionByName(posts_new), max_shingle_df
+    # pinned: the prefix window and the overlap count both read it
+    posts = _scoped_cache(
+        probed_hist.unionByName(posts_new).withColumn(
+            "gdf", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
+        ),
+        "inc_idx_posts",
     )
-    gdf = posts_all.groupBy("shingle").agg(F.count(F.lit(1)).alias("gdf"))
+    ranked = posts
+    if max_shingle_df is not None:
+        ranked = posts.filter(F.col("gdf") <= max_shingle_df)
     w = Window.partitionBy(id_col).orderBy("gdf", "shingle")
-    prefix = (
-        posts_all.join(gdf, "shingle")
-        .withColumn("pos", F.row_number().over(w))
+    # pinned: both sides of the candidate self-join read it
+    prefix = _scoped_cache(
+        ranked.withColumn("pos", F.row_number().over(w))
         .filter(
             F.col("pos") <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
         )
-        .select(F.col(id_col), "shingle", "pos", "n_sh")
+        .select(F.col(id_col), "shingle", "pos", "n_sh"),
+        "inc_idx_prefix",
     )
-    new_ids = new.select(id_col).dropDuplicates()
     a = prefix.select(
         F.col(id_col).alias("id_a"), "shingle",
         F.col("pos").alias("pos_a"), F.col("n_sh").alias("n_a"),
     )
-    b = prefix.join(new_ids, id_col, "left_semi").select(
+    b = prefix.join(sh_new.select(id_col), id_col, "left_semi").select(
         F.col(id_col).alias("id_b"), "shingle",
         F.col("pos").alias("pos_b"), F.col("n_sh").alias("n_b"),
     )
@@ -1029,31 +1047,24 @@ def incremental_near_dup_pairs_indexed(
         )
         .dropDuplicates()
     )
-    # exact verification: shingle sets from the new side's arrays and,
-    # for the (few) candidate historical docs only, from their postings
-    cand_ids = (
-        candidates.select(F.col("id_a").alias(id_col))
-        .unionByName(candidates.select(F.col("id_b").alias(id_col)))
-        .dropDuplicates()
+    # exact verification: |A ∩ B| is the count of shingles both docs
+    # post (uncapped), |A ∪ B| = n_a + n_b - |A ∩ B|
+    pa = posts.select(
+        F.col(id_col).alias("id_a"), "shingle", F.col("n_sh").alias("n_a")
     )
-    exist_sets = (
-        existing_posts.join(cand_ids, id_col, "left_semi")
-        .groupBy(id_col)
-        .agg(F.collect_set("shingle").alias("shingles"))
+    pb = posts.select(
+        F.col(id_col).alias("id_b"), "shingle", F.col("n_sh").alias("n_b")
     )
-    all_sets = exist_sets.unionByName(sh_new.select(id_col, "shingles"))
-    sa = all_sets.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    sb = all_sets.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
+    inter = F.col("inter")
     return (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
+        candidates.join(pa, "id_a")
+        .join(pb, ["id_b", "shingle"])
+        .groupBy("id_a", "id_b", "n_a", "n_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
         .select(
             "id_a",
             "id_b",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b"))
-            ).alias("jaccard"),
+            (inter / (F.col("n_a") + F.col("n_b") - inter)).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )

@@ -114,11 +114,21 @@ def object_store_confs(env: dict[str, str] | None = None) -> dict[str, str]:
     return confs
 
 
+def default_driver_memory() -> str:
+    """Half of physical memory, capped at 48g: in local mode the driver
+    JVM holds every executor, and a heap larger than the machine lets
+    the kernel kill it before the garbage collector runs."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(1024, min(48 * 1024, phys_mb // 2))}m"
+
+
 def get_spark(app_name: str = "rtedp-spark", cpus: int | None = None) -> SparkSession:
     """Local session tuned for the test harness.
 
     On a real cluster the master/memory settings come from spark-submit;
     everything set here is either local-only or cluster-neutral.
+    ``SPARK_DRIVER_MEMORY`` sets the driver heap; unset, it is
+    ``default_driver_memory()``.
 
     Python workers fork from ``worker_daemon``, which skips the
     ``pyspark.zip`` re-read PySpark's worker does before every task
@@ -131,7 +141,10 @@ def get_spark(app_name: str = "rtedp-spark", cpus: int | None = None) -> SparkSe
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

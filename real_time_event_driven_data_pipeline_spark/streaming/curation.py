@@ -11,10 +11,11 @@ activation drains newly landed document files and gates them:
     2. exact-dup gate   (md5 fingerprint vs a narrow fingerprint
                          sidecar of everything accepted so far, plus
                          keep-min-id within the batch)
-    3. near-dup gate    (``incremental_near_dup_pairs`` — new batch vs
-                         accumulated corpus + within-batch, PPJoin
-                         machinery; drops the NEW side of each pair so
-                         the accepted corpus never changes retroactively)
+    3. near-dup gate    (``incremental_near_dup_pairs_indexed`` — new
+                         batch vs the accumulated corpus's posting index
+                         + within-batch, PPJoin machinery; drops the NEW
+                         side of each pair so the accepted corpus never
+                         changes retroactively)
 
 Survivors append to the corpus; rejects land in quarantine with a
 ``reject_reason`` column.  The fingerprint sidecar is the same narrow
@@ -986,17 +987,21 @@ class CorpusCurationPipeline:
                 incremental_connected_components,
             )
 
+            # pairs (and ipairs / epairs) are pinned above, so only a
+            # union of several gates' edges needs a pin of its own
             edges = pairs.select("id_a", "id_b")
             if self.image_gate:
                 edges = edges.unionByName(ipairs.select("id_a", "id_b"))
             if self.embedding_gate:
                 edges = edges.unionByName(epairs.select("id_a", "id_b"))
+            if self.image_gate or self.embedding_gate:
+                edges = self._pin(edges)
             raw = read_epoch_dir(
                 self.spark, self.cc_label_dir, exclude_epoch=epoch_id
             )
             updated = incremental_connected_components(
                 raw.select("id", "comp") if raw is not None else None,
-                self._pin(edges),
+                edges,
                 src="id_a",
                 dst="id_b",
             ).withColumn("epoch", F.lit(epoch_id).cast("long"))

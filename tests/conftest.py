@@ -41,27 +41,12 @@ SLOW_TESTS = {
     "test_star_cc_long_chain_few_rounds",
     "test_star_cc_matches_union_find",
     "test_star_cc_on_fixed_graphs",
-    "test_cluster_label_sidecar_tracks_evolving_dup_graph",
     "test_curation_pipeline_gates_across_activations",
-    "test_decontamination_gate_quarantines_eval_overlap",
-    "test_embedding_gate_backfill_indexes_pregate_history",
-    "test_embedding_gate_quarantines_paraphrase_dups",
-    "test_image_gate_backfill_indexes_pregate_history",
     "test_image_gate_quarantines_perceptual_dups",
-    "test_image_gate_within_batch_chain_drops_conservatively",
-    "test_incremental_manifest_continues_across_epochs",
-    "test_instrument_io_records_stage_deltas",
-    "test_manifest_backfill_assigns_preflag_history",
-    "test_manifest_backfill_refusals",
-    "test_posting_sidecar_tracks_accepted",
     "test_reindex_embedding_lsh_index_migrates_bucket_space",
-    "test_reindex_image_dhash_index_migrates_band_space",
-    "test_reliable_checkpoint_mode_same_gating",
     "test_all_queries_match_oracle_sf0001",
-    "test_curation_gate_partial_replay_converges",
     "test_curation_gate_skips_committed_epoch",
     "test_incremental_embedding_gate_properties",
-    "test_incremental_indexed_cap_preserves_recall",
     "test_indexed_gate_probed_restriction_property",
     "test_lsh_plane_autosizing",
     "test_scd2_merge_equals_rebuild_property",

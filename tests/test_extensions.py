@@ -197,6 +197,27 @@ def test_incremental_indexed_cap_preserves_recall(spark, docs):
     assert capped == uncapped
 
 
+def test_incremental_indexed_job_count(spark, docs):
+    """Regression guard on the indexed gate's plan shape: every relation
+    it reads more than once is pinned, so a 40-document batch over a
+    posting history runs a few dozen Spark jobs at most.  Left lazy,
+    Catalyst inlined ~2^4 copies of the posting union whose exchanges
+    each ran as their own job (~370 here).  Jobs are counted by job-id
+    high-water mark, which late-session job-store eviction cannot skew."""
+    posts = dedup.doc_postings(docs.filter(F.col("doc_id") % 2 == 0)).cache()
+    posts.count()
+    new = docs.filter((F.col("doc_id") % 2 == 1) & (F.col("doc_id") < 80))
+    assert new.count() == 40
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
+    dedup.incremental_near_dup_pairs_indexed(
+        posts, new, threshold=0.5, max_shingle_df=50
+    ).collect()
+    jobs = scheduler.numTotalJobs() - before
+    posts.unpersist()
+    assert jobs <= 30, jobs
+
+
 def test_text_stats_ranges(spark, docs):
     stats = text.text_stats(docs).collect()
     assert len(stats) == docs.count()

@@ -6,14 +6,29 @@ docker-images/validation/validate.py:58-63) — and, critically, that the
 hook stays dormant for local/test sessions.
 """
 
+import os
+
 from pyspark.sql import SparkSession
 
-from real_time_event_driven_data_pipeline_spark.session import object_store_confs
+from real_time_event_driven_data_pipeline_spark.session import (
+    default_driver_memory,
+    object_store_confs,
+)
 
 
 def test_dormant_without_opt_in():
     assert object_store_confs({}) == {}
     assert object_store_confs({"RTEDP_S3A_ENDPOINT": "http://x"}) == {}
+
+
+def test_default_driver_memory_fits_the_machine():
+    """Unset SPARK_DRIVER_MEMORY must not ask for a heap the machine
+    cannot back: a local-mode JVM growing past physical memory is
+    killed by the kernel mid-suite."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    got = default_driver_memory()
+    assert got.endswith("m")
+    assert 1024 <= int(got[:-1]) <= min(48 * 1024, max(1024, phys_mb // 2))
 
 
 def test_base_s3a_confs():
